@@ -2811,7 +2811,9 @@ def mmr_select(embeddings: DataFrame, k: int = MMR_K) -> DataFrame:
     # sf0.1 the swap cuts q_sim_mmr 2.50 -> 2.25 s min-of-3 (~10% —
     # job-scheduling overhead, not data) with bit-identical output (the
     # arithmetic is untouched — same plan, same doubles; oracle parity
-    # re-proved at all three SFs).
+    # re-proved at all three SFs).  Caveat: a local checkpoint drops the
+    # lineage, so on a cluster a lost executor makes a later round fail
+    # with a checkpoint-block-not-found error instead of recomputing.
     cand = (
         base.filter(F.col("vec_id") != qid)
         .select(

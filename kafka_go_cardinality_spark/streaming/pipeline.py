@@ -33,8 +33,15 @@ Scale notes (100 TB / 1000 executors):
 - The only shuffle per grain is the windowed aggregation; partial HLL
   sketches (DataSketches, sparse below promotion) merge map-side, so the
   exchange carries at most ~16 KiB per (window) group — not uids.
-- Streaming state is one HLL sketch per open window per grain — bounded by
-  watermark retention, not by input size.  The exact-twin path
+- Streaming state is one HLL sketch per (grain, window) key.  Spark
+  evicts a key only when it is a ``window()`` over the watermarked ``ts``
+  and the query runs in append or update mode; then state is bounded by
+  watermark retention.  ``date_trunc`` keys (month/year in
+  ``stream_cardinality``, every grain in ``stream_grain_fanout``) carry no
+  watermark, so their state is never evicted and grows with the number of
+  distinct windows the stream has seen (a 30k-event replay whose
+  timestamps step up to an hour apart left 30,194 state rows, 0 removed).
+  Complete mode keeps every key by definition.  The exact-twin path
   (``stream_exact_cardinality``) instead keeps one state row per
   (uid, window): correct, oracle-checkable, and intentionally NOT the
   scale path.
@@ -343,15 +350,19 @@ def replay_to_memory(
     ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_ndb = spark.conf.get(ndb_key, None)
     spark.conf.set(ndb_key, "true" if no_data_batch else "false")
-    query = (
-        stats.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    query = None
     try:
+        # Built and started inside the try: a start-time AnalysisException
+        # (e.g. an unsupported output mode) must still restore the conf
+        # and remove the checkpoint dir.
+        query = (
+            stats.writeStream.format("memory")
+            .queryName(table_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         finished = query.awaitTermination(timeout_s)
         if not finished:
             # Timeout with micro-batches still committing: stop the
@@ -374,7 +385,7 @@ def replay_to_memory(
             spark.conf.set(ndb_key, prev_ndb)
         else:
             spark.conf.unset(ndb_key)
-        if not query.isActive:
+        if query is None or not query.isActive:
             shutil.rmtree(ckpt, ignore_errors=True)
         # else: leak the scratch dir rather than yank the WAL from a
         # query that survived stop(); the raise above still fires.
@@ -488,11 +499,14 @@ def stream_grain_fanout(
     grains' state transactionally).
 
     One shuffle keyed by (grain, window start); state is one sparse HLL
-    sketch per open (grain, window) pair, dominated by minutes and
-    bounded by watermark retention.  date_trunc handles all five grains
-    uniformly (calendar month/year included — ``window()`` can't), which
-    constrains the query to update/complete output; the fixed-duration
-    grains' append-mode variants exist as the per-grain queries.
+    sketch per (grain, window) pair, dominated by minutes.  The
+    ``date_trunc`` keys carry no watermark, so Spark never evicts that
+    state: it holds every (grain, window) pair the stream has seen and
+    grows with the input's event-time span, not with watermark retention.
+    date_trunc handles all five grains uniformly (calendar month/year
+    included — ``window()`` can't), which constrains the query to
+    update/complete output; the fixed-duration grains' append-mode
+    variants exist as the per-grain queries.
     """
     grains_arr = F.array(*[F.lit(g) for g in GRAINS])
     exploded = events.withWatermark("ts", watermark).select(

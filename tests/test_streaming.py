@@ -657,8 +657,6 @@ def test_replays_identical_without_no_data_batch(spark, monkeypatch):
     silent truncation.  q_stream_upsert_sink manages the conf inside its
     own foreachBatch writer (no replay_to_memory seam); its merged table
     equals the batch aggregate by oracle parity either way."""
-    import functools
-
     import __spark_entry__ as entry
     from kafka_go_cardinality_spark.streaming import pipeline as pl
     import kafka_go_cardinality_spark.queries_streaming as qsm
@@ -688,3 +686,24 @@ def test_replays_identical_without_no_data_batch(spark, monkeypatch):
         monkeypatch.setattr(qsm, "replay_to_memory", orig)
         without = sorted(map(tuple, qs[name](spark, sf).collect()))
         assert with_ndb == without, name
+
+
+def test_replay_start_failure_restores_conf_and_removes_checkpoint(
+    spark, wire_dir, tmp_path, monkeypatch
+):
+    """A writer that fails in ``.start()`` (append mode on an
+    un-watermarked aggregation) must not leave the no-data-batch override
+    on the shared session — a later append-mode windowed replay would lose
+    its final windows — nor leave its checkpoint dir behind."""
+    from pyspark.errors import AnalysisException
+
+    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    monkeypatch.setenv("KGC_CHECKPOINT_SCRATCH", str(tmp_path))
+    spark.conf.unset(ndb_key)
+    counts = parse_user_events(file_user_source(spark, wire_dir)).groupBy(
+        "uid"
+    ).count()
+    with pytest.raises(AnalysisException):
+        replay_to_memory(counts, f"t_{uuid.uuid4().hex[:8]}", output_mode="append")
+    assert spark.conf.get(ndb_key, None) is None
+    assert list(tmp_path.iterdir()) == []

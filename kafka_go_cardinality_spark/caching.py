@@ -1,12 +1,11 @@
-"""Query-scoped lifecycle for persisted intermediates.
+"""Two lifetimes of engine-owned intermediates.
 
-Several operators persist a mid-plan frame that feeds multiple plan
-branches (LSH signature tables, IVF/PQ codebooks, contamination
-buckets).  ``DataFrame.persist`` has no scope — without explicit
-release, every such frame stays pinned in executor storage memory for
-the life of the session, and a 192-query sweep accumulates dozens of
-dead cached tables (the round-4 verdict's "persisted intermediates
-never unpersisted").
+**Query-scoped persisted frames.**  Several operators persist a mid-plan
+frame that feeds multiple plan branches (LSH signature tables, IVF/PQ
+codebooks, contamination buckets).  ``DataFrame.persist`` has no scope —
+without explicit release, every such frame stays pinned in executor
+storage memory for the life of the session, and a 192-query sweep
+accumulates dozens of dead cached tables.
 
 The operators cannot unpersist themselves: they return a LAZY DataFrame
 whose action happens in the caller, after which the cache is garbage.
@@ -31,17 +30,40 @@ does so via an autouse fixture.  The registry is guarded by a lock so
 concurrent query execution (two threads driving one session) can't
 corrupt the list; release ordering across threads remains the caller's
 concern, as with any shared cache pool.
+
+**Process-scoped scratch datasets.**  Some queries read a derived
+dataset that is storage prep, not query cost: a wire dump standing in
+for a retained topic, an LSH index, a partitioned / bucketed / z-ordered
+layout, a format round-trip, a stored sketch table.  :func:`materialized`
+writes each one once per process into a fresh dir under one scratch
+root and memoizes the build's result by a key that must name every
+input the write reads; it rebuilds when the dir has gone.
+:func:`scratch_dir` hands out uncached dirs under the same root for
+per-call writes.  The root is created on first use and removed when
+the process exits, so nothing outlives the process — like the
+reference pipeline, which keeps no on-disk state of its own and
+replays the topic on restart.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import os
+import shutil
+import tempfile
 import threading
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
 _LOCK = threading.Lock()
+
+_T = TypeVar("_T")
+_SCRATCH_ROOT: str | None = None
+# key -> (dir, build result)
+_MATERIALIZED: dict[Hashable, tuple[str, object]] = {}
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -76,3 +98,30 @@ def scoped_caches():
         yield
     finally:
         release_tracked()
+
+
+def scratch_dir() -> str:
+    """A fresh, uncached dir under the process scratch root, which is
+    created on first use and removed at interpreter exit."""
+    global _SCRATCH_ROOT
+    with _LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="kgc_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+        root = _SCRATCH_ROOT
+    return tempfile.mkdtemp(dir=root)
+
+
+def materialized(key: Hashable, build: Callable[[str], _T]) -> _T:
+    """Run ``build(dir)`` once per ``key`` into a fresh scratch dir and
+    return its memoized result while that dir exists; rebuild if it has
+    been removed.  ``key`` must name every input the build reads.  The
+    build runs outside any lock: two threads missing on one key both
+    build, and the last result is kept."""
+    hit = _MATERIALIZED.get(key)
+    if hit is not None and os.path.isdir(hit[0]):
+        return hit[1]
+    path = scratch_dir()
+    result = build(path)
+    _MATERIALIZED[key] = (path, result)
+    return result

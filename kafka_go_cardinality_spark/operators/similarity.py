@@ -610,13 +610,7 @@ def _centroid_scored_cells(embeddings: DataFrame, n_centroids: int, keep=()):
     if not seed_vecs:
         return base, []
 
-    def _seq_norm(vec):
-        acc = 0.0
-        for x in vec:
-            acc = acc + float(x) * float(x)
-        return math.sqrt(acc)
-
-    cent_norms = [_seq_norm(vec) for vec in seed_vecs]
+    cent_norms = [_seq_norm_py(vec) for vec in seed_vecs]
 
     # Same arithmetic as cosine_pre(dot(v, c), nrm, cn), with the model
     # shipped as one folded Literal (see _dmodel) instead of a 16×64
@@ -1123,13 +1117,6 @@ def _quantized(embeddings: DataFrame) -> DataFrame:
             F.col("embedding"),
             lambda x: F.round(x.cast("double") * KMEANS_Q).cast("long"),
         ).alias("vq"),
-    )
-
-
-def _centroid_frame(spark, centroids: list[list[int]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(ci, [int(x) for x in vec]) for ci, vec in enumerate(centroids)],
-        "cluster int, cq array<bigint>",
     )
 
 

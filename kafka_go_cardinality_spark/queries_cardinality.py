@@ -34,6 +34,7 @@ from kafka_go_cardinality_spark.operators.cardinality import (
     stats_shape,
     theta_day_retention,
 )
+from kafka_go_cardinality_spark.caching import materialized
 from kafka_go_cardinality_spark.queries import query
 from kafka_go_cardinality_spark.sources import load_table
 
@@ -218,40 +219,32 @@ def q_grain_fanout_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grain_fanout_rollup(_events(spark, sf_dir))
 
 
-# One persisted day-sketch table per (process, sf_dir): the stand-in for
-# yesterday's production sketch table.  Built once — at 100 TB this is
-# last night's job output, not part of today's query cost.
-_SKETCH_TABLES: dict[str, tuple[str, str]] = {}
-
-
 def _stored_sketches(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize day sketches for all but the final 7 days to parquet;
-    returns (path, cutoff_day_iso)."""
-    import os as _os
-
-    existing = _SKETCH_TABLES.get(sf_dir)
-    if existing and _os.path.isdir(existing[0]):
-        return existing
-    import tempfile
-
+    returns (path, cutoff_day_iso).  The stand-in for yesterday's
+    production sketch table, built once per process — at 100 TB this is
+    last night's job output, not part of today's query cost."""
     from kafka_go_cardinality_spark.operators.cardinality import day_sketches
 
-    events = _events(spark, sf_dir)
-    cutoff = events.select(
-        F.date_format(
-            F.date_sub(F.max(F.date_trunc("day", "ts")), 6), "yyyy-MM-dd"
-        ).alias("c")
-    ).first()["c"]
-    path = tempfile.mkdtemp(prefix="kgc_day_sketches_")
-    (
-        day_sketches(
-            events.filter(F.date_trunc("day", "ts") < F.lit(cutoff).cast("timestamp"))
+    def build(path: str) -> tuple[str, str]:
+        events = _events(spark, sf_dir)
+        cutoff = events.select(
+            F.date_format(
+                F.date_sub(F.max(F.date_trunc("day", "ts")), 6), "yyyy-MM-dd"
+            ).alias("c")
+        ).first()["c"]
+        (
+            day_sketches(
+                events.filter(
+                    F.date_trunc("day", "ts") < F.lit(cutoff).cast("timestamp")
+                )
+            )
+            .write.mode("overwrite")
+            .parquet(path)
         )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _SKETCH_TABLES[sf_dir] = (path, cutoff)
-    return path, cutoff
+        return path, cutoff
+
+    return materialized(("day_sketches", sf_dir), build)
 
 
 @query("q_card_sketch_incremental", oracle=None)  # sketch estimates: rows-only

@@ -23,6 +23,7 @@ from kafka_go_cardinality_spark.operators.relational import (
     topk,
 )
 from kafka_go_cardinality_spark.queries import query
+from kafka_go_cardinality_spark.session import conf_override
 from kafka_go_cardinality_spark.sources import load_table
 
 
@@ -1424,10 +1425,7 @@ def q_join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         lineitem = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_extendedprice"
         )
@@ -1448,9 +1446,6 @@ def q_join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # would plan a bloom-less join.)
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 @query(

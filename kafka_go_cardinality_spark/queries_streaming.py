@@ -17,12 +17,13 @@ approx twins (DataSketches HLL, bounded state) remain the 100 TB path.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kafka_go_cardinality_spark.caching import materialized, scratch_dir
 from kafka_go_cardinality_spark.queries import query
+from kafka_go_cardinality_spark.session import conf_override
 from kafka_go_cardinality_spark.sources import load_table
 from kafka_go_cardinality_spark.streaming import (
     file_user_source,
@@ -33,11 +34,6 @@ from kafka_go_cardinality_spark.streaming import (
     stream_cardinality,
     stream_exact_cardinality,
 )
-
-# One wire dump per (process, sf_dir): five streaming queries replay the
-# same JSONL, so write it once.  Keyed also by pid-safe tmp dir.
-_WIRE_DIRS: dict[str, str] = {}
-
 
 def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
     """events.parquet → JSONL wire dump ``{"uid": ..., "ts": <unix s>}``
@@ -50,24 +46,26 @@ def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
     key and ``parse_user_events`` drops it (kafkaio.go:77-81
     log-and-continue).  Every oracle over this wire therefore carries
     ``WHERE user_id IS NOT NULL AND ts IS NOT NULL`` — the SQL mirror of
-    that filter; on NULL-free fixtures it is a no-op."""
-    existing = _WIRE_DIRS.get(sf_dir)
-    if existing and os.path.isdir(existing):
-        return existing
-    events = load_table(spark, sf_dir, "events")
-    wire = events.select(
-        F.to_json(
-            F.struct(
-                F.col("user_id").cast("string").alias("uid"),
-                F.col("ts").cast("long").alias("ts"),
-            )
-        ).alias("value")
-    )
-    path = tempfile.mkdtemp(prefix="kgc_wire_")
-    # A handful of files ≈ a handful of Kafka partitions; plenty for replay.
-    wire.coalesce(8).write.mode("overwrite").text(path)
-    _WIRE_DIRS[sf_dir] = path
-    return path
+    that filter; on NULL-free fixtures it is a no-op.
+
+    Written once per (process, sf_dir): several streaming queries replay
+    the same JSONL."""
+
+    def build(path: str) -> str:
+        events = load_table(spark, sf_dir, "events")
+        wire = events.select(
+            F.to_json(
+                F.struct(
+                    F.col("user_id").cast("string").alias("uid"),
+                    F.col("ts").cast("long").alias("ts"),
+                )
+            ).alias("value")
+        )
+        # A handful of files ≈ a handful of Kafka partitions; plenty for replay.
+        wire.coalesce(8).write.mode("overwrite").text(path)
+        return path
+
+    return materialized(("wire", sf_dir), build)
 
 
 # ~512 KiB of wire input per state-store partition, capped at the
@@ -102,14 +100,21 @@ def _wire_dir(spark: SparkSession, sf_dir: str) -> str:
 _WIRE_BYTES_PER_STATE_PARTITION = 512 << 10
 
 
-def _state_partitions(wire_path: str, ceiling: int, stores: int = 1) -> int:
+def _state_conf(
+    spark: SparkSession, wire_path: str, stores: int = 1
+) -> dict[str, str]:
+    """The shuffle.partitions override for a replay of ``wire_path``.  Read
+    at query start (stream planning has no AQE to coalesce later), so
+    callers hold it with ``conf_override`` around the blocking replay."""
+    key = "spark.sql.shuffle.partitions"
     total = sum(
         e.stat().st_size
         for e in os.scandir(wire_path)
         if e.name.startswith("part-")
     )
     per_part = _WIRE_BYTES_PER_STATE_PARTITION * max(1, stores)
-    return max(1, min(ceiling, -(-total // per_part)))
+    ceiling = int(spark.conf.get(key))
+    return {key: str(max(1, min(ceiling, -(-total // per_part))))}
 
 
 # Latest memory-sink table per replay prefix: a memory sink pins its
@@ -122,6 +127,21 @@ def _state_partitions(wire_path: str, ceiling: int, stores: int = 1) -> int:
 _LAST_REPLAY_TABLE: dict[str, str] = {}
 
 
+def _replay_latest(
+    src: DataFrame, prefix: str, output_mode: str = "complete"
+) -> DataFrame:
+    """Replay ``src`` into a fresh ``{prefix}_*`` memory sink, drop the
+    previous sink of that prefix, and return the new one."""
+    spark = src.sparkSession
+    table = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    replay_to_memory(src, table, output_mode=output_mode)
+    old = _LAST_REPLAY_TABLE.get(prefix)
+    if old is not None:
+        spark.catalog.dropTempView(old)
+    _LAST_REPLAY_TABLE[prefix] = table
+    return spark.table(table)
+
+
 def _replay(
     spark: SparkSession,
     sf_dir: str,
@@ -130,26 +150,12 @@ def _replay(
     output_mode: str = "complete",
     stores: int = 1,
 ) -> DataFrame:
+    """Replay the wire dump through ``build``.  ``stores`` = stateful
+    operators stacked in the built plan (see _state_conf)."""
     wire = _wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # Read at query start (stream planning has no AQE to coalesce later);
-    # restored after the blocking replay finishes.  ``stores`` = stateful
-    # operators stacked in the built plan (see _state_partitions).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_state_partitions(wire, int(prev), stores)),
-    )
-    try:
+    with conf_override(spark, _state_conf(spark, wire, stores)):
         parsed = parse_user_events(file_user_source(spark, wire))
-        table = f"{prefix}_{uuid.uuid4().hex[:8]}"
-        replay_to_memory(build(parsed), table, output_mode=output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    old = _LAST_REPLAY_TABLE.get(prefix)
-    if old is not None:
-        spark.catalog.dropTempView(old)
-    _LAST_REPLAY_TABLE[prefix] = table
-    return spark.table(table)
+        return _replay_latest(build(parsed), prefix, output_mode)
 
 
 @query(
@@ -358,27 +364,22 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Typed wire dump (uid, ts, etype) for the stream-stream join — the
 # reference's wire has no event type (processor.go:13-16), so this is
 # the E18 extension wire.  One dump per (process, sf_dir).
-_TYPED_WIRE_DIRS: dict[str, str] = {}
-
-
 def _typed_wire_dir(spark: SparkSession, sf_dir: str) -> str:
-    existing = _TYPED_WIRE_DIRS.get(sf_dir)
-    if existing and os.path.isdir(existing):
-        return existing
-    events = load_table(spark, sf_dir, "events")
-    wire = events.select(
-        F.to_json(
-            F.struct(
-                F.col("user_id").cast("string").alias("uid"),
-                F.col("ts").cast("long").alias("ts"),
-                F.col("event_type").alias("etype"),
-            )
-        ).alias("value")
-    )
-    path = tempfile.mkdtemp(prefix="kgc_wire_typed_")
-    wire.coalesce(8).write.mode("overwrite").text(path)
-    _TYPED_WIRE_DIRS[sf_dir] = path
-    return path
+    def build(path: str) -> str:
+        events = load_table(spark, sf_dir, "events")
+        wire = events.select(
+            F.to_json(
+                F.struct(
+                    F.col("user_id").cast("string").alias("uid"),
+                    F.col("ts").cast("long").alias("ts"),
+                    F.col("event_type").alias("etype"),
+                )
+            ).alias("value")
+        )
+        wire.coalesce(8).write.mode("overwrite").text(path)
+        return path
+
+    return materialized(("wire_typed", sf_dir), build)
 
 
 @query(
@@ -403,19 +404,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just shape."""
     from pyspark.sql.types import StructField, StructType, StringType, LongType
 
-    from kafka_go_cardinality_spark.streaming.pipeline import (
-        interval_join_streams,
-        replay_to_memory,
-    )
+    from kafka_go_cardinality_spark.streaming.pipeline import interval_join_streams
 
     wire = _typed_wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # 4 internal stores per partition for a stream-stream join
-        str(_state_partitions(wire, int(prev), stores=4)),
-    )
-    try:
+    # 4 internal stores per partition for a stream-stream join
+    with conf_override(spark, _state_conf(spark, wire, stores=4)):
         schema = StructType(
             [
                 StructField("uid", StringType()),
@@ -436,11 +429,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         views = parsed.filter(F.col("etype") == "view").drop("etype")
         clicks = parsed.filter(F.col("etype") == "click").drop("etype")
         joined = interval_join_streams(views, clicks)
-        table = f"ssj_{uuid.uuid4().hex[:8]}"
-        replay_to_memory(joined, table, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(table)
+        return _replay_latest(joined, "ssj", output_mode="append")
 
 
 @query(
@@ -468,7 +457,7 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch aggregate — the merged state must equal a from-scratch
     groupBy."""
     wire = _wire_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="kgc_upsert_")
+    base = scratch_dir()
     versions: list[str] = []
 
     def upsert(batch_df, batch_id: int) -> None:
@@ -483,17 +472,14 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(path)
         versions.append(path)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(wire, int(prev)))
-    )
     # Skip the trailing no-data micro-batch (the replay_to_memory
     # rationale): in update mode it emits zero keys, so its only effect
     # here was one extra no-op upsert version written and swapped.
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_ndb = spark.conf.get(ndb_key, None)
-    spark.conf.set(ndb_key, "false")
-    try:
+    confs = {
+        **_state_conf(spark, wire),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    with conf_override(spark, confs):
         parsed = parse_user_events(
             spark.readStream.option("maxFilesPerTrigger", "3").text(wire)
         )
@@ -516,12 +502,6 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q_stream_upsert_sink replay did not finish within 300 s "
                 f"({len(versions)} batches committed)"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_ndb is not None:
-            spark.conf.set(ndb_key, prev_ndb)
-        else:
-            spark.conf.unset(ndb_key)
     return spark.read.parquet(versions[-1])
 
 
@@ -570,36 +550,23 @@ def _register_stream_profile() -> None:
             user_profile_stream,
         )
 
-        d = tempfile.mkdtemp(prefix="kgc_profile_wire_")
+        d = scratch_dir()
         load_table(spark, sf_dir, "events").select(
             "user_id", "event_type"
         ).coalesce(4).write.mode("overwrite").json(d)
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
+        rocksdb = {
+            "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        )
-        try:
+        }
+        with conf_override(spark, rocksdb):
             src = spark.readStream.schema(
                 "user_id long, event_type string"
             ).json(d)
-            table = f"stream_profile_{uuid.uuid4().hex[:8]}"
-            replay_to_memory(
-                user_profile_stream(src), table, output_mode="update"
+            sink = _replay_latest(
+                user_profile_stream(src), "stream_profile", output_mode="update"
             )
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-        return spark.table(table).groupBy("user_id").agg(
+        return sink.groupBy("user_id").agg(
             F.max("n_events").alias("n_events"),
             F.max("n_types").alias("n_types"),
         )
@@ -609,37 +576,32 @@ _register_stream_profile()
 
 
 # Vector wire dump for the online-embedding-ingest query: one per
-# (process, sf_dir), like _WIRE_DIRS.  Doubles are widened BEFORE
+# (process, sf_dir), like _wire_dir.  Doubles are widened BEFORE
 # to_json so the JSONL round-trip is exact (Jackson serializes doubles
 # shortest-round-trip; the oracle's CAST(embedding AS DOUBLE[]) is the
 # same float→double widening).
-_VEC_WIRE_DIRS: dict[str, str] = {}
-
-
 def _vec_wire_dir(spark: SparkSession, sf_dir: str) -> str:
-    existing = _VEC_WIRE_DIRS.get(sf_dir)
-    if existing and os.path.isdir(existing):
-        return existing
-    emb = load_table(spark, sf_dir, "embeddings")
-    wire = emb.select(
-        F.to_json(
-            F.struct(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                F.expr("transform(embedding, x -> cast(x as double))").alias(
-                    "embedding"
-                ),
-            )
-        ).alias("value")
-    )
-    path = tempfile.mkdtemp(prefix="kgc_vec_wire_")
-    wire.coalesce(4).write.mode("overwrite").text(path)
-    _VEC_WIRE_DIRS[sf_dir] = path
-    return path
+    def build(path: str) -> str:
+        emb = load_table(spark, sf_dir, "embeddings")
+        wire = emb.select(
+            F.to_json(
+                F.struct(
+                    F.col("vec_id").cast("long").alias("vec_id"),
+                    F.expr("transform(embedding, x -> cast(x as double))").alias(
+                        "embedding"
+                    ),
+                )
+            ).alias("value")
+        )
+        wire.coalesce(4).write.mode("overwrite").text(path)
+        return path
+
+    return materialized(("vec_wire", sf_dir), build)
 
 
 # The near-dup guard's STATIC side — the planted LSH index, banded —
-# materialized to parquet once per (process, sf_dir).  A stream-static
-# join re-analyzes the static plan EVERY micro-batch, and the
+# materialized to parquet once per (process, sf_dir, bits, bands).  A
+# stream-static join re-analyzes the static plan EVERY micro-batch, and the
 # md5-hyperplane sketch is a ~4k-literal generated expression tree, so
 # keeping it in the live plan made each replay pay seconds of repeated
 # driver-side analysis (q_stream_vec_neardup was 6.4 s at sf0.1 —
@@ -647,19 +609,14 @@ def _vec_wire_dir(spark: SparkSession, sf_dir: str) -> str:
 # trivial plan and the values are bit-identical (parquet doubles are
 # exact).  This is also the production shape: an ingest gate reads its
 # index as a TABLE, it does not recompute sketches per batch.
-_VEC_INDEX_DIRS: dict[str, str] = {}
-
-
-def _vec_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    existing = _VEC_INDEX_DIRS.get(sf_dir)
-    if existing and os.path.isdir(existing):
-        return existing
+def _vec_index_dir(spark: SparkSession, sf_dir: str, bits: int, bands: int) -> str:
     from kafka_go_cardinality_spark.functions import norm
     from kafka_go_cardinality_spark.operators import similarity as sim
 
-    index = sim.with_planted_neighbors(
-        load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", F.col("embedding").alias("v"))
+    def build(path: str) -> str:
+        index = sim.with_planted_neighbors(
+            load_table(spark, sf_dir, "embeddings")
+        ).select("vec_id", F.col("embedding").alias("v"))
     # dot64_seq's contract (64 fully-measured dims on BOTH sides) holds
     # here by construction, not by luck: with_planted_neighbors filters
     # `vec_finite & size == 64` on the index side (similarity.py — same
@@ -669,26 +626,25 @@ def _vec_index_dir(spark: SparkSession, sf_dir: str) -> str:
     # unfiltered index — is refuted by that upstream filter, and
     # tests/test_streaming.py::test_vec_neardup_poisoned_corpus_parity
     # pins the invariant with malformed rows planted in the corpus).
-    # Scale-aware band values (see the ladder block): band b = its own
-    # w-plane mini-sketch over planes [b·w, (b+1)·w) — exactly
-    # bands·width planes are ever computed (guide §2.3: don't compute
-    # what you throw away; at sf0.1's (5, 3) rung that is 15 planes
-    # against the 80-plane oracle ceiling), values identical to the
-    # old packed-sketch bit windows wherever both exist.
-    bits, bands = _neardup_dims_for(spark, sf_dir)
-    ibase = index.withColumn(
-        "bvals", sim.ann_band_values("v", bits, bands)
-    ).withColumn("nrm", norm(F.col("v")))
-    ibands = ibase.select(
-        F.col("vec_id").alias("dup_of"),
-        F.col("v").alias("iv"),
-        F.col("nrm").alias("inrm"),
-        F.posexplode("bvals").alias("band", "band_bits"),
-    )
-    path = tempfile.mkdtemp(prefix="kgc_vec_index_")
-    ibands.coalesce(4).write.mode("overwrite").parquet(path)
-    _VEC_INDEX_DIRS[sf_dir] = path
-    return path
+        # Scale-aware band values (see the ladder block): band b = its own
+        # w-plane mini-sketch over planes [b·w, (b+1)·w) — exactly
+        # bands·width planes are ever computed (guide §2.3: don't compute
+        # what you throw away; at sf0.1's (5, 3) rung that is 15 planes
+        # against the 80-plane oracle ceiling), values identical to the
+        # old packed-sketch bit windows wherever both exist.
+        ibase = index.withColumn(
+            "bvals", sim.ann_band_values("v", bits, bands)
+        ).withColumn("nrm", norm(F.col("v")))
+        ibands = ibase.select(
+            F.col("vec_id").alias("dup_of"),
+            F.col("v").alias("iv"),
+            F.col("nrm").alias("inrm"),
+            F.posexplode("bvals").alias("band", "band_bits"),
+        )
+        ibands.coalesce(4).write.mode("overwrite").parquet(path)
+        return path
+
+    return materialized(("vec_index", sf_dir, bits, bands), build)
 
 
 def _vec_assign_oracle() -> str:
@@ -747,14 +703,13 @@ def q_stream_vec_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivf cells derivation per physical row), unlike the
     aggregation-bearing streaming replays whose sketch values are
     rows-only."""
-    import math as _math
-
     from kafka_go_cardinality_spark.functions import as_double, norm, vec_finite
     from kafka_go_cardinality_spark.operators.similarity import (
         IVF_CENTROIDS,
         _dedup_rows_by_id,
         _dlit,
         _dot_sql,
+        _seq_norm_py,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -769,12 +724,6 @@ def q_stream_vec_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not seed_vecs:
         return spark.createDataFrame([], "vec_id bigint, cell int, cos double")
 
-    def _seq_norm(vec):
-        acc = 0.0
-        for x in vec:
-            acc = acc + float(x) * float(x)
-        return _math.sqrt(acc)
-
     def _cell_cos(vec, cn: float) -> str:
         if not cn > 0:
             return "0.0D"
@@ -786,7 +735,7 @@ def q_stream_vec_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_arr = F.expr(
         "array(%s)"
         % ", ".join(
-            _cell_cos(vec, _seq_norm(vec)) for vec in seed_vecs
+            _cell_cos(vec, _seq_norm_py(vec)) for vec in seed_vecs
         )
     )
     wire = _vec_wire_dir(spark, sf_dir)
@@ -809,13 +758,7 @@ def q_stream_vec_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.array_max("ca"), 6).alias("cos"),
         )
     )
-    table = f"stream_vec_assign_{uuid.uuid4().hex[:8]}"
-    replay_to_memory(src, table, output_mode="append")
-    old = _LAST_REPLAY_TABLE.get("stream_vec_assign")
-    if old is not None:
-        spark.catalog.dropTempView(old)
-    _LAST_REPLAY_TABLE["stream_vec_assign"] = table
-    return spark.table(table)
+    return _replay_latest(src, "stream_vec_assign", output_mode="append")
 
 
 # Online near-dup ingest guard: cosine threshold for "this incoming
@@ -1065,13 +1008,7 @@ def q_stream_vec_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Append mode is therefore deterministic per wire row and the query
     is FULLY ORACLED."""
     src = _vec_neardup_pairs(spark, sf_dir)
-    table = f"stream_vec_neardup_{uuid.uuid4().hex[:8]}"
-    replay_to_memory(src, table, output_mode="append")
-    old = _LAST_REPLAY_TABLE.get("stream_vec_neardup")
-    if old is not None:
-        spark.catalog.dropTempView(old)
-    _LAST_REPLAY_TABLE["stream_vec_neardup"] = table
-    return spark.table(table)
+    return _replay_latest(src, "stream_vec_neardup", output_mode="append")
 
 
 def _vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1103,7 +1040,7 @@ def _vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build (both sides fall out of the same raw count, as the oracle's
     # bw CTE does).
     bits, bands = _neardup_dims_for(spark, sf_dir)
-    ibands = spark.read.parquet(_vec_index_dir(spark, sf_dir))
+    ibands = spark.read.parquet(_vec_index_dir(spark, sf_dir, bits, bands))
     wire = _vec_wire_dir(spark, sf_dir)
     return (
         spark.readStream.schema("vec_id long, embedding array<double>")
@@ -1194,18 +1131,5 @@ def q_stream_vec_neardup_distinct(
     # ceiling's per-partition state commits (the _WIRE_BYTES_PER_
     # STATE_PARTITION rationale).
     wire = _vec_wire_dir(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_state_partitions(wire, int(prev))),
-    )
-    table = f"stream_vec_neardup_d_{uuid.uuid4().hex[:8]}"
-    try:
-        replay_to_memory(src, table, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    old = _LAST_REPLAY_TABLE.get("stream_vec_neardup_d")
-    if old is not None:
-        spark.catalog.dropTempView(old)
-    _LAST_REPLAY_TABLE["stream_vec_neardup_d"] = table
-    return spark.table(table)
+    with conf_override(spark, _state_conf(spark, wire)):
+        return _replay_latest(src, "stream_vec_neardup_d", output_mode="append")

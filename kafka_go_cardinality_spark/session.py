@@ -13,7 +13,9 @@ The engine targets large clusters (the design point is ~100 TB inputs on
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +61,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of the block, then restore each
+    previous value — or unset the key if it was unset before."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

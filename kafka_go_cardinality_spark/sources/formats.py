@@ -3,9 +3,10 @@
 The reference only speaks Kafka (``/root/reference/kafkaio/kafkaio.go:29-36``);
 SURVEY.md §2.3 E1 mandates file scans beyond parquet.  Each helper
 round-trips a fixture table through the target format into a per-process
-temp dir (written once, reused) and reads it back with an EXPLICIT schema
-— inference is a correctness and performance anti-pattern at scale (it
-costs an extra full pass and can flip types between runs).
+scratch dir (written once, reused; see caching.materialized) and reads it
+back with an EXPLICIT schema — inference is a correctness and performance
+anti-pattern at scale (it costs an extra full pass and can flip types
+between runs).
 
 Scale notes: JSON/CSV are row formats — no column pruning, no predicate
 pushdown, no min/max skipping; the engine supports scanning them but any
@@ -15,14 +16,10 @@ columnar properties (pushdown lines up with the parquet plan tests).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_go_cardinality_spark.caching import materialized
 from kafka_go_cardinality_spark.sources.tables import load_table
-
-_FORMAT_DIRS: dict[tuple[str, str, str], str] = {}
 
 # Columns exercised per round-trip table: integer + string + nested-free
 # types survive every wire format identically (timestamps deliberately
@@ -32,19 +29,17 @@ ROUNDTRIP_COLUMNS = ("n_nationkey", "n_name", "n_regionkey")
 
 
 def format_dir(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
-    """Write `table` once as `fmt` under a temp dir; return the path."""
-    key = (sf_dir, table, fmt)
-    existing = _FORMAT_DIRS.get(key)
-    if existing and os.path.isdir(existing):
-        return existing
-    df = load_table(spark, sf_dir, table).select(*ROUNDTRIP_COLUMNS)
-    path = tempfile.mkdtemp(prefix=f"kgc_{fmt}_")
-    writer = df.write.mode("overwrite")
-    if fmt == "csv":
-        writer = writer.option("header", "true")
-    writer.format(fmt).save(path)
-    _FORMAT_DIRS[key] = path
-    return path
+    """Write `table` once as `fmt` under a scratch dir; return the path."""
+
+    def build(path: str) -> str:
+        df = load_table(spark, sf_dir, table).select(*ROUNDTRIP_COLUMNS)
+        writer = df.write.mode("overwrite")
+        if fmt == "csv":
+            writer = writer.option("header", "true")
+        writer.format(fmt).save(path)
+        return path
+
+    return materialized(("format", sf_dir, table, fmt), build)
 
 
 def scan_format(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:

@@ -55,21 +55,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from kafka_go_cardinality_spark.operators.cardinality import (
-    GRAINS,
-    REFERENCE_LG_K,
-)
-
-
-def _hll_value(col: str = "uid") -> Column:
-    """DataSketches HLL estimate at the reference's register count
-    (lg_k=14, processor.go:80).  Works on streaming frames: the sketch is
-    the aggregation state the state store carries per open window, sparse
-    until register promotion — a near-empty window costs tens of bytes,
-    not HLL++'s ~21 KiB dense buffer."""
-    return F.hll_sketch_estimate(
-        F.hll_sketch_agg(F.col(col), F.lit(REFERENCE_LG_K))
-    ).alias("value")
+from kafka_go_cardinality_spark.operators.cardinality import GRAINS, _hll_estimate
+from kafka_go_cardinality_spark.session import conf_override
 
 # Wire schema of one Kafka message value (processor.go:13-16): unknown JSON
 # fields are dropped by the schema itself, matching jsoniter's behavior.
@@ -170,10 +157,14 @@ def stream_cardinality(
     """
     if grain not in GRAINS:
         raise ValueError(f"unknown grain {grain!r}; expected one of {GRAINS}")
-    agg = _hll_value("uid")
+    agg = _hll_estimate("uid").alias("value")
     wm = events.withWatermark("ts", watermark)
     if grain in FIXED_DURATION:
-        grouped = wm.groupBy(F.window("ts", FIXED_DURATION[grain])).agg(agg)
+        # window() counts from the epoch, a Thursday: offset weeks by 4
+        # days so they start on Monday, as date_trunc('week') does.
+        start = "4 days" if grain == "week" else None
+        window = F.window("ts", FIXED_DURATION[grain], startTime=start)
+        grouped = wm.groupBy(window).agg(agg)
         return grouped.select(
             *_stat_projection(F.unix_timestamp("window.start"), grain, F.col("value"))
         )
@@ -220,7 +211,7 @@ def sliding_cardinality(
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", length, slide))
-        .agg(_hll_value("uid"))
+        .agg(_hll_estimate("uid").alias("value"))
         .select(
             F.unix_timestamp("window.start").alias("window_start"),
             F.unix_timestamp("window.end").alias("window_end"),
@@ -345,46 +336,41 @@ def replay_to_memory(
     (or any watermark-timeout stateful op) emits its final windows IN
     the no-data batch — such a query must pass ``no_data_batch=True``
     or it will return an empty/truncated frame."""
-    spark = stats.sparkSession
     ckpt = _ephemeral_checkpoint_dir()
     ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_ndb = spark.conf.get(ndb_key, None)
-    spark.conf.set(ndb_key, "true" if no_data_batch else "false")
+    ndb = {ndb_key: "true" if no_data_batch else "false"}
     query = None
     try:
-        # Built and started inside the try: a start-time AnalysisException
-        # (e.g. an unsupported output mode) must still restore the conf
-        # and remove the checkpoint dir.
-        query = (
-            stats.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = query.awaitTermination(timeout_s)
-        if not finished:
-            # Timeout with micro-batches still committing: stop the
-            # query BEFORE deleting its checkpoint — rmtree under an
-            # active query aborts it asynchronously — and RAISE: the
-            # memory sink holds partial aggregates at this point, and
-            # returning normally would serve them to the caller as the
-            # query's complete result.
-            query.stop()
-            query.awaitTermination(30)
-            raise TimeoutError(
-                f"streaming replay {table_name!r} exceeded {timeout_s}s "
-                "and was stopped; the memory sink is partial and must "
-                "not be read"
+        # Built and started inside the override: a start-time
+        # AnalysisException (e.g. an unsupported output mode) must still
+        # restore the conf and remove the checkpoint dir.
+        with conf_override(stats.sparkSession, ndb):
+            query = (
+                stats.writeStream.format("memory")
+                .queryName(table_name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
+            finished = query.awaitTermination(timeout_s)
+            if not finished:
+                # Timeout with micro-batches still committing: stop the
+                # query BEFORE deleting its checkpoint — rmtree under an
+                # active query aborts it asynchronously — and RAISE: the
+                # memory sink holds partial aggregates at this point, and
+                # returning normally would serve them to the caller as the
+                # query's complete result.
+                query.stop()
+                query.awaitTermination(30)
+                raise TimeoutError(
+                    f"streaming replay {table_name!r} exceeded {timeout_s}s "
+                    "and was stopped; the memory sink is partial and must "
+                    "not be read"
+                )
     finally:
         import shutil
 
-        if prev_ndb is not None:
-            spark.conf.set(ndb_key, prev_ndb)
-        else:
-            spark.conf.unset(ndb_key)
         if query is None or not query.isActive:
             shutil.rmtree(ckpt, ignore_errors=True)
         # else: leak the scratch dir rather than yank the WAL from a
@@ -523,7 +509,7 @@ def stream_grain_fanout(
             F.concat(F.col("grain"), F.lit("_count")).alias("type"),
             wstart.alias("wstart"),
         )
-        .agg(_hll_value("uid"))
+        .agg(_hll_estimate("uid").alias("value"))
         .select(
             "type",
             F.unix_timestamp("wstart").cast("long").alias("timestamp"),

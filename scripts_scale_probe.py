@@ -409,6 +409,7 @@ def main() -> int:
         # for both dirs OUTSIDE measured time so base and scaled runs
         # each time pure replay.
         from kafka_go_cardinality_spark.queries_streaming import (
+            _neardup_dims_for,
             _typed_wire_dir,
             _vec_index_dir,
             _vec_wire_dir,
@@ -419,7 +420,7 @@ def main() -> int:
             _wire_dir(spark, d_)
             _typed_wire_dir(spark, d_)
             _vec_wire_dir(spark, d_)
-            _vec_index_dir(spark, d_)
+            _vec_index_dir(spark, d_, *_neardup_dims_for(spark, d_))
     elif curate_mode:
         scaled = build_scaled_curate_dir(factor, src)
     elif vectors_mode:

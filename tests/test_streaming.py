@@ -57,14 +57,16 @@ def test_stream_parse_skips_malformed(spark, wire_dir):
     assert counted.collect()[0]["count"] == 1_960
 
 
-def test_stream_matches_batch_on_same_wire(spark, wire_dir):
-    """The streaming day-grain HLL over the file replay must equal the
+@pytest.mark.parametrize("grain", ["day", "week"])
+def test_stream_matches_batch_on_same_wire(spark, wire_dir, grain):
+    """The streaming window()-grain HLL over the file replay must equal the
     identical batch aggregation over the identical parsed rows — HLL merge
-    is order- and partitioning-insensitive."""
+    is order- and partitioning-insensitive — with windows aligned like
+    date_trunc (weeks start on Monday, not on the epoch's Thursday)."""
     streamed = _replay(
         spark,
         stream_cardinality(
-            parse_user_events(file_user_source(spark, wire_dir)), "day"
+            parse_user_events(file_user_source(spark, wire_dir)), grain
         ),
     )
     batch_raw = spark.read.text(wire_dir)
@@ -76,17 +78,13 @@ def test_stream_matches_batch_on_same_wire(spark, wire_dir):
         )
         .filter(F.col("msg").isNotNull() & F.col("msg.uid").isNotNull())
         .select("msg.uid", F.timestamp_seconds("msg.ts").alias("ts"))
-        .groupBy(F.window("ts", "1 day"))
+        .groupBy(F.date_trunc(grain, "ts").alias("wstart"))
         .agg(
             F.hll_sketch_estimate(F.hll_sketch_agg(F.col("uid"), F.lit(14))).alias(
                 "value"
             )
         )
-        .select(
-            F.lit("day_count").alias("type"),
-            F.unix_timestamp("window.start").alias("timestamp"),
-            F.col("value"),
-        )
+        .select(F.unix_timestamp("wstart").alias("timestamp"), F.col("value"))
     )
     got = {(r["timestamp"], r["value"]) for r in streamed.collect()}
     exp = {(r["timestamp"], r["value"]) for r in batch.collect()}
@@ -256,7 +254,7 @@ def test_kafka_source_and_sink_build_without_broker(spark, tmp_path):
     assert writer is not None
 
 
-def test_transform_with_state_profile(spark, sf_dir):
+def test_transform_with_state_profile(spark, sf_dir, tmp_path):
     """Spark 4 transformWithStateInPandas per-user profile: final state
     must equal the batch aggregate.  The state-server protocol needs
     google.protobuf on the driver; skip where the environment lacks it
@@ -264,29 +262,25 @@ def test_transform_with_state_profile(spark, sf_dir):
     import pytest
 
     pytest.importorskip("google.protobuf")
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from kafka_go_cardinality_spark.session import conf_override
     from kafka_go_cardinality_spark.sources import load_table
     from kafka_go_cardinality_spark.streaming.stateful_v2 import (
         user_profile_stream,
     )
 
     events = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="kgc_tws_")
+    d = str(tmp_path / "wire")
     events.select("user_id", "event_type").coalesce(2).write.mode(
         "overwrite"
     ).json(d)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-    try:
+    }
+    with conf_override(spark, rocksdb):
         src = spark.readStream.schema("user_id long, event_type string").json(d)
         out = user_profile_stream(src)
         q = (
@@ -311,13 +305,6 @@ def test_transform_with_state_profile(spark, sf_dir):
         )
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
 
 
 def test_stream_grain_fanout_matches_batch_sketches(spark, sf_dir):
@@ -373,12 +360,8 @@ def test_vec_neardup_distinct_parity_under_duplicate_vec_ids(spark, tmp_path):
 
     from kafka_go_cardinality_spark.queries import QUERIES
     from kafka_go_cardinality_spark.queries_streaming import (
-        _LAST_REPLAY_TABLE,
-        _VEC_INDEX_DIRS,
-        _VEC_WIRE_DIRS,
         _vec_neardup_distinct_oracle,
     )
-    from kafka_go_cardinality_spark.sources import load_table
     from tests.conftest import SF_DIR, assert_frames_match
 
     sf = str(tmp_path / "dup_sf")
@@ -399,19 +382,13 @@ def test_vec_neardup_distinct_parity_under_duplicate_vec_ids(spark, tmp_path):
             WHERE vec_id < 40
         ) TO '{sf}/embeddings.parquet' (FORMAT PARQUET)"""
     )
-    try:
-        got = QUERIES["q_stream_vec_neardup_distinct"](spark, sf).toPandas()
-        con.execute(
-            f"CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{sf}/embeddings.parquet')"
-        )
-        want = con.execute(_vec_neardup_distinct_oracle()).fetchdf()
-        assert_frames_match(got, want)
-    finally:
-        # Drop the per-sf_dir caches so later tests against the real
-        # fixture don't reuse this corpus's wire/index.
-        _VEC_WIRE_DIRS.pop(sf, None)
-        _VEC_INDEX_DIRS.pop(sf, None)
+    got = QUERIES["q_stream_vec_neardup_distinct"](spark, sf).toPandas()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf}/embeddings.parquet')"
+    )
+    want = con.execute(_vec_neardup_distinct_oracle()).fetchdf()
+    assert_frames_match(got, want)
 
 
 def test_vec_neardup_poisoned_corpus_parity(spark, tmp_path):
@@ -433,10 +410,6 @@ def test_vec_neardup_poisoned_corpus_parity(spark, tmp_path):
     import duckdb
 
     from kafka_go_cardinality_spark.queries import ORACLE_SQL, QUERIES
-    from kafka_go_cardinality_spark.queries_streaming import (
-        _VEC_INDEX_DIRS,
-        _VEC_WIRE_DIRS,
-    )
     from tests.conftest import SF_DIR, assert_frames_match
 
     sf = str(tmp_path / "poison_sf")
@@ -469,8 +442,6 @@ def test_vec_neardup_poisoned_corpus_parity(spark, tmp_path):
             assert_frames_match(got, want)
     finally:
         con.close()
-        _VEC_WIRE_DIRS.pop(sf, None)
-        _VEC_INDEX_DIRS.pop(sf, None)
 
 
 def test_neardup_band_width_ladder_matches_oracle_sql():
@@ -532,11 +503,7 @@ def test_vec_neardup_scaled_width_parity_and_planted_recall(spark):
     import duckdb
 
     from kafka_go_cardinality_spark.queries import ORACLE_SQL, QUERIES
-    from kafka_go_cardinality_spark.queries_streaming import (
-        _VEC_INDEX_DIRS,
-        _VEC_WIRE_DIRS,
-        _neardup_bits_for,
-    )
+    from kafka_go_cardinality_spark.queries_streaming import _neardup_bits_for
     from scripts_scale_probe import build_scaled_vectors_dir
     from tests.conftest import assert_frames_match
 
@@ -575,8 +542,6 @@ def test_vec_neardup_scaled_width_parity_and_planted_recall(spark):
             len(caught), len(planted)
         )
     finally:
-        _VEC_WIRE_DIRS.pop(d, None)
-        _VEC_INDEX_DIRS.pop(d, None)
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -641,8 +606,6 @@ def test_vec_neardup_parity_at_nine_bit_width(spark, monkeypatch):
             len(caught), len(planted)
         )
     finally:
-        qs._VEC_WIRE_DIRS.pop(d, None)
-        qs._VEC_INDEX_DIRS.pop(d, None)
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -682,10 +645,14 @@ def test_replays_identical_without_no_data_batch(spark, monkeypatch):
         monkeypatch.setattr(pl, "replay_to_memory", force_no_data_batch)
         monkeypatch.setattr(qsm, "replay_to_memory", force_no_data_batch)
         with_ndb = sorted(map(tuple, qs[name](spark, sf).collect()))
+        n_tables = len(spark.catalog.listTables())
         monkeypatch.setattr(pl, "replay_to_memory", orig)
         monkeypatch.setattr(qsm, "replay_to_memory", orig)
         without = sorted(map(tuple, qs[name](spark, sf).collect()))
         assert with_ndb == without, name
+        # A re-run replaces its previous memory sink instead of pinning
+        # another result in driver memory.
+        assert len(spark.catalog.listTables()) == n_tables, name
 
 
 def test_replay_start_failure_restores_conf_and_removes_checkpoint(
